@@ -519,18 +519,6 @@ def register_testdata(
             read_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Return {name: DataFrame} for every testdata table present in sf_dir."""
-    from nineinfra_spark.sources.readers import read_table
-
-    out: dict[str, DataFrame] = {}
-    for t in TPCH_TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            out[t] = read_table(spark, sf_dir, t)
-    return out
-
-
 _DEFAULT_ENGINE: Engine | None = None
 
 

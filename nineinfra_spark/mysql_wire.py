@@ -40,22 +40,25 @@ protocol — the subset every driver needs to connect and query):
   denominator every connector parses);
 - ``COM_PING`` → OK, ``COM_QUIT`` → close, anything else → ERR.
 
-Result fetch is bounded exactly like the REST frontend
-(``limit(n+1)`` probe, cap :data:`nineinfra_spark.rest.MAX_FETCH_LIMIT`)
-— a wire gateway FETCHES a window; unbounded extraction is a WRITE
-through SQL. The server is a daemon thread per connection on the
-shared session, like the other frontends.
+Result fetch is the REST frontend's :func:`nineinfra_spark.rest.fetch_bounded`
+at :data:`~nineinfra_spark.rest.DEFAULT_FETCH_LIMIT` rows — a wire
+gateway FETCHES a window; unbounded extraction is a WRITE through SQL.
+The server is a stdlib ``ThreadingTCPServer`` with one daemon thread
+per connection on the shared session, returned as the same
+:class:`nineinfra_spark.rest.Gateway` handle as REST; ``stop()`` ends
+the serving loop, closes the listener and shuts down live connections.
 """
 
 from __future__ import annotations
 
+import itertools
 import socket
+import socketserver
 import struct
-import threading
 
 from pyspark.sql import SparkSession
 
-from nineinfra_spark.rest import DEFAULT_FETCH_LIMIT, MAX_FETCH_LIMIT
+from nineinfra_spark.rest import DEFAULT_FETCH_LIMIT, Gateway, fetch_bounded
 
 SERVER_VERSION = "8.0.0-nineinfra-spark"
 
@@ -86,18 +89,13 @@ def _lenenc_str(s: bytes) -> bytes:
     return _lenenc_int(len(s)) + s
 
 
-class _Conn:
+class _Conn(socketserver.BaseRequestHandler):
     """One client connection: packet framing + the command loop."""
 
-    def __init__(
-        self,
-        sock: socket.socket,
-        spark: SparkSession,
-        conn_id: int,
-        auth=None,
-        conns: set | None = None,
-    ):
-        self._sock = sock
+    server: _Server
+
+    def setup(self) -> None:
+        self._sock = self.request
         # USER-share by default: every connection plans on the shared
         # session (its temp views ARE the served tables — same model
         # as headerless REST). A connection only gets its own
@@ -107,12 +105,11 @@ class _Conn:
         # mid-query (r11 review finding); the lazy clone isolates the
         # mutation without breaking shared-view serving for everyone
         # else.
-        self._shared = spark
-        self._spark = spark
-        self._conn_id = conn_id
-        self._auth = auth  # (username, password) -> bool, or None = open
+        self._shared = self.server.spark
+        self._spark = self._shared
+        self._conn_id = self.server.conns[self._sock]
+        self._auth = self.server.auth  # (username, password) -> bool, or None = open
         self._seq = 0
-        self._conns = conns  # gateway's live-socket registry (for stop)
 
     # -- framing -----------------------------------------------------------
     def _recv_exact(self, n: int) -> bytes:
@@ -281,12 +278,9 @@ class _Conn:
 
     def _run_query(self, sql: str) -> None:
         try:
-            df = self._spark.sql(sql)
-            limit = min(DEFAULT_FETCH_LIMIT, MAX_FETCH_LIMIT)
-            fetched = df.limit(limit + 1).collect()
-            rows = fetched[:limit]
-            truncated = len(fetched) > limit
-            cols = df.columns
+            cols, rows, truncated = fetch_bounded(
+                self._spark.sql(sql), DEFAULT_FETCH_LIMIT
+            )
         except Exception as exc:  # engine error → ERR packet, connection lives
             self._send_err(str(exc)[:900])
             return
@@ -320,7 +314,7 @@ class _Conn:
         # collected and discarded with no signal at all)
         self._send_eof(warnings=1 if truncated else 0)
 
-    def serve(self) -> None:
+    def handle(self) -> None:
         try:
             if not self._handshake():
                 return
@@ -357,87 +351,57 @@ class _Conn:
                     self._send_err(f"unsupported command 0x{packet[0]:02x}", 1047)
         except (ConnectionError, OSError):
             pass  # client went away — normal teardown
-        finally:
-            if self._conns is not None:
-                self._conns.discard(self._sock)
-            self._sock.close()
 
 
-class MySqlGateway:
-    """Handle for a running MySQL-protocol endpoint."""
+class _Server(socketserver.ThreadingTCPServer):
+    """Loopback listener; one daemon thread per connection (no join on
+    close, so stopping never waits for an in-flight query)."""
 
-    def __init__(
-        self,
-        server: socket.socket,
-        thread: threading.Thread,
-        conns: set | None = None,
-    ):
-        self._server = server
-        self._thread = thread
-        self._conns = conns if conns is not None else set()
+    allow_reuse_address = True
+    request_queue_size = 16
+    daemon_threads = True
+    block_on_close = False
 
-    @property
-    def port(self) -> int:
-        return self._server.getsockname()[1]
+    def __init__(self, port: int, spark: SparkSession, auth) -> None:
+        self.spark = spark
+        self.auth = auth
+        self.conns: dict[socket.socket, int] = {}  # live socket -> conn id
+        self._ids = itertools.count(1)
+        super().__init__(("127.0.0.1", port), _Conn)
 
-    def stop(self) -> None:
-        try:
-            self._server.close()
-        except OSError:
-            pass
-        # close established connections too — a stopped gateway used
-        # to leave connection threads serving queries against a
-        # soon-to-be-stopped SparkContext (r11 review finding); the
-        # socket close makes their next recv/send raise and the
-        # thread tear down cleanly
-        for sock in list(self._conns):
+    def get_request(self):
+        # runs on the serving thread only, so ids need no lock
+        sock, addr = super().get_request()
+        self.conns[sock] = next(self._ids)
+        return sock, addr
+
+    def shutdown_request(self, request) -> None:
+        self.conns.pop(request, None)
+        super().shutdown_request(request)
+
+    def server_close(self) -> None:
+        super().server_close()
+        # end established connections too — a stopped gateway used to
+        # leave connection threads serving queries against a
+        # soon-to-be-stopped SparkContext (r11 review finding); their
+        # next recv/send fails and the thread tears down cleanly
+        for sock in list(self.conns):
             try:
                 sock.shutdown(socket.SHUT_RDWR)
             except OSError:
                 pass
-            try:
-                sock.close()
-            except OSError:
-                pass
-        self._thread.join(timeout=10)
 
 
 def start_mysql_gateway(
     spark: SparkSession, port: int = 0, auth=None
-) -> MySqlGateway:
+) -> Gateway:
     """Serve the MySQL-protocol frontend on ``port`` (0 = OS-assigned).
-    Accept loop on a daemon thread; one daemon thread per connection,
-    planning on the shared session (USER-share, same as headerless
-    REST) until the connection issues USE — from then on it runs on
-    its own ``newSession()`` clone so the database switch never
-    changes name resolution for anyone else.
+    One daemon thread per connection, planning on the shared session
+    (USER-share, same as headerless REST) until the connection issues
+    USE — from then on it runs on its own ``newSession()`` clone so the
+    database switch never changes name resolution for anyone else.
     ``auth``: optional ``(username, password) -> bool`` validator
     (typically :class:`nineinfra_spark.auth.UserStore`) enforced via
     AuthSwitch to ``mysql_clear_password``; ``None`` = the open
     Doris-default frontend."""
-    server = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-    server.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-    server.bind(("127.0.0.1", port))
-    server.listen(16)
-    conn_counter = threading.Lock()
-    state = {"next_id": 1}
-    conns: set = set()
-
-    def _accept_loop() -> None:
-        while True:
-            try:
-                sock, _ = server.accept()
-            except OSError:
-                return  # stop() closed the listener
-            with conn_counter:
-                cid = state["next_id"]
-                state["next_id"] += 1
-            conns.add(sock)
-            threading.Thread(
-                target=_Conn(sock, spark, cid, auth=auth, conns=conns).serve,
-                daemon=True,
-            ).start()
-
-    thread = threading.Thread(target=_accept_loop, daemon=True)
-    thread.start()
-    return MySqlGateway(server, thread, conns)
+    return Gateway(_Server(port, spark, auth))

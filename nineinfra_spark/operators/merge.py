@@ -51,7 +51,11 @@ def _is_retryable_race(exc: AnalysisException, allow_exists: bool = False) -> bo
     CAS, a taken destination) — as opposed to a permanent analysis
     error (unknown column, bad location, …) that retrying can never
     fix."""
-    cls = getattr(exc, "getErrorClass", lambda: None)() or ""
+    # getCondition (Spark 4) replaces the deprecated getErrorClass
+    condition = getattr(exc, "getCondition", None) or getattr(
+        exc, "getErrorClass", lambda: None
+    )
+    cls = condition() or ""
     msg = str(exc)
     if "TABLE_OR_VIEW_NOT_FOUND" in cls or "TABLE_OR_VIEW_NOT_FOUND" in msg:
         return True

@@ -48,7 +48,7 @@ _load_all()
 #: `catalog_merge_timetravel`), then r12-cohort fill (the oldest
 #: artifact stamps, alphabetical). ZERO new registrations: the
 #: registry stays at rotation steady state (250 = 5 windows x 50).
-#: The 18 r12-stamped rows that did not fit lead the r18 window
+#: The 17 r12-stamped rows that did not fit lead the r18 window
 #: (enumerated in the trailing comment; derivation pinned by
 #: tests/test_window_rotation.py).
 _VERIFY_FIRST = [

@@ -9,15 +9,21 @@ port 10099.
 
 Design constraints, mirrored from the gateway tier's reality:
 
-- The server is a daemon thread in the driver process; Spark sessions
-  are thread-safe for concurrent ``sql()`` calls (each request plans
-  on the shared session, like Kyuubi's USER-share engine mode).
-- Result fetch is a bounded ``limit(n).collect()`` — a gateway FETCHES
-  a window of rows to the client by definition; the cap (default
-  1000, per-request override) keeps a careless ``SELECT * FROM fact``
+- The server is a stdlib ``ThreadingHTTPServer`` on a daemon thread
+  in the driver process, behind the :class:`Gateway` handle that the
+  MySQL frontend (``mysql_wire``) shares; Spark sessions are
+  thread-safe for concurrent ``sql()`` calls (each request plans on
+  the shared session, like Kyuubi's USER-share engine mode).
+- Result fetch is :func:`fetch_bounded`, the one bounded fetch of
+  both frontends — a gateway FETCHES a window of rows to the client
+  by definition; the cap (default 1000, per-request override checked
+  by :func:`check_limit`) keeps a careless ``SELECT * FROM fact``
   from materializing 100 TB on the driver. Unbounded extraction is a
-  WRITE (``INSERT INTO``/``CREATE TABLE AS``) through the same SQL
-  surface, exactly as on the real platform.
+  WRITE (``INSERT INTO``/``CREATE TABLE AS``) or a cursor through the
+  same SQL surface, exactly as on the real platform.
+- Every POST endpoint (``/sql``, ``/ops/*``, statement fetch) runs
+  the same preamble first: credentials (401), ``X-Proxy-User`` (403),
+  a JSON-object body (400).
 
 Endpoints:
 
@@ -88,13 +94,16 @@ from __future__ import annotations
 
 import base64
 import binascii
+import functools
 import json
+import socketserver
 import threading
+import uuid
 from collections import OrderedDict
 from collections.abc import Callable
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_FETCH_LIMIT = 1000
 #: Server-side ceiling on the per-request ``limit`` override — the cap
@@ -114,6 +123,33 @@ MAX_STATEMENTS = 32
 #: dropped — a returning client gets a fresh clone, the same contract
 #: as a gateway-side idle-session timeout).
 MAX_SESSIONS = 64
+
+
+def check_limit(value, name: str = "limit", lo: int = 0) -> int:
+    """A client-supplied row count as an int in ``[lo, MAX_FETCH_LIMIT]``;
+    ``ValueError``/``TypeError`` otherwise."""
+    n = int(value)
+    if n < lo or n > MAX_FETCH_LIMIT:
+        raise ValueError(f"{name} must be in [{lo}, {MAX_FETCH_LIMIT}], got {n}")
+    return n
+
+
+def fetch_bounded(df: DataFrame, limit: int) -> tuple[list, list, bool]:
+    """The gateway fetch: at most ``limit`` rows of ``df`` as
+    ``(columns, rows, truncated)``. Collects ``limit + 1`` rows so the
+    drop is reported without a ``count()`` pass."""
+    rows = df.limit(limit + 1).collect()
+    return df.columns, rows[:limit], len(rows) > limit
+
+
+def _resultset(df: DataFrame, limit: int) -> dict:
+    columns, rows, truncated = fetch_bounded(df, limit)
+    return {
+        "columns": columns,
+        "rows": [list(r) for r in rows],
+        "rowCount": len(rows),
+        "truncated": truncated,
+    }
 
 
 def _json_default(v):
@@ -329,6 +365,30 @@ class _Handler(BaseHTTPRequestHandler):
             return (proxy, None)
         return (None, f"user '{authed}' may not impersonate '{proxy}'")
 
+    def _preamble(self) -> tuple[str, str | None, dict] | None:
+        """The checks every POST endpoint shares, in order: credentials
+        (401), ``X-Proxy-User`` (403), a JSON-object body (400).
+        Returns ``(authed, effective, body)``, or ``None`` once the
+        error reply is sent."""
+        authed = self._authenticate()
+        if authed is None:
+            self._reply_unauthorized()
+            return None
+        effective, deny = self._resolve_proxy_user(authed)
+        if deny is not None:
+            self._reply(403, {"error": deny})
+            return None
+        try:
+            req = json.loads(self._read_body() or b"{}")
+            if not isinstance(req, dict):
+                raise TypeError(
+                    f"body must be a JSON object, got {type(req).__name__}"
+                )
+        except (TypeError, ValueError) as exc:  # JSONDecodeError included
+            self._reply(400, {"error": f"bad request: {exc}"})
+            return None
+        return authed, effective, req
+
     def _statement_for(self, stmt_id: str, owner: str):
         """Look up an open cursor, enforcing owner scoping. Returns
         the statement or None (unknown/foreign ids are both 404 — a
@@ -363,21 +423,8 @@ class _Handler(BaseHTTPRequestHandler):
             return
         self._reply(404, {"error": f"unknown path {self.path}"})
 
-    def _handle_fetch(self, stmt_id: str) -> None:
-        authed = self._authenticate()
-        if authed is None:
-            self._reply_unauthorized()
-            return
-        try:
-            req = json.loads(self._read_body() or b"{}")
-            max_rows = int(req.get("max", DEFAULT_FETCH_LIMIT))
-            if max_rows < 1 or max_rows > MAX_FETCH_LIMIT:
-                raise ValueError(
-                    f"max must be in [1, {MAX_FETCH_LIMIT}], got {max_rows}"
-                )
-        except (TypeError, ValueError, json.JSONDecodeError) as exc:
-            self._reply(400, {"error": f"bad request: {exc}"})
-            return
+    def _handle_fetch(self, stmt_id: str, authed: str, _effective, req: dict) -> None:
+        max_rows = check_limit(req.get("max", DEFAULT_FETCH_LIMIT), "max", lo=1)
         st = self._statement_for(stmt_id, authed)
         if st is None:
             self._reply(404, {"error": "unknown statement"})
@@ -406,114 +453,128 @@ class _Handler(BaseHTTPRequestHandler):
             },
         )
 
-    def _handle_op(self, op: str) -> None:
-        """Operator endpoints: the audit (table-changes) and OPTIMIZE
-        (zorder-append) loops the Python API exposes, served from the
-        gateway tier. Same auth/session semantics as ``/sql``; results
-        are bounded fetches (table-changes) or small stats dicts
-        (zorder-append)."""
-        authed = self._authenticate()
-        if authed is None:
-            self._reply_unauthorized()
-            return
-        effective, deny = self._resolve_proxy_user(authed)
-        if deny is not None:
-            self._reply(403, {"error": deny})
-            return
-        try:
-            req = json.loads(self._read_body() or b"{}")
-            if not isinstance(req, dict):
-                raise TypeError(
-                    f"body must be a JSON object, got {type(req).__name__}"
-                )
-        except (TypeError, ValueError, json.JSONDecodeError) as exc:
-            self._reply(400, {"error": f"bad request: {exc}"})
-            return
+    def _handle_op(self, op: str, authed: str, effective, req: dict) -> None:
+        """Operator endpoints: the audit (table-changes), point-lookup
+        (bloom-probe) and OPTIMIZE (zorder-append) loops the Python API
+        exposes, served from the gateway tier. Same auth/session
+        semantics as ``/sql``; results are bounded fetches or small
+        stats dicts (zorder-append)."""
         sess = self._session(effective, authed)
-        try:
-            if op == "table-changes":
-                from nineinfra_spark.operators.diff import table_changes
+        if op == "table-changes":
+            from nineinfra_spark.operators.diff import table_changes
 
-                table = req["table"]
-                key_cols = list(req["keyCols"])
-                limit = int(req.get("limit", DEFAULT_FETCH_LIMIT))
-                if limit < 0 or limit > MAX_FETCH_LIMIT:
-                    raise ValueError(
-                        f"limit must be in [0, {MAX_FETCH_LIMIT}], got {limit}"
-                    )
-                df = table_changes(
-                    sess,
-                    table,
-                    key_cols,
-                    from_version=int(req.get("fromVersion", 0)),
-                    allow_schema_evolution=bool(
-                        req.get("allowSchemaEvolution", False)
+            limit = check_limit(req.get("limit", DEFAULT_FETCH_LIMIT))
+            df = table_changes(
+                sess,
+                req["table"],
+                list(req["keyCols"]),
+                from_version=int(req.get("fromVersion", 0)),
+                allow_schema_evolution=bool(
+                    req.get("allowSchemaEvolution", False)
+                ),
+            )
+            self._reply(200, _resultset(df, limit))
+        elif op == "bloom-probe":
+            from nineinfra_spark.operators.bloomindex import bloom_skipping_read
+
+            keys = req["keys"]
+            if not isinstance(keys, list):
+                raise TypeError("keys must be a JSON array")
+            limit = check_limit(req.get("limit", DEFAULT_FETCH_LIMIT))
+            out, bstats = bloom_skipping_read(sess, req["path"], keys)
+            self._reply(
+                200,
+                {
+                    **_resultset(out, limit),
+                    "filesTotal": bstats["files_total"],
+                    "filesHit": bstats["files_hit"],
+                    "filesSkipped": bstats["files_skipped"],
+                },
+            )
+        elif op == "zorder-append":
+            from nineinfra_spark.operators.zorder import zorder_layout_append
+
+            key_cols = req.get("keyCols")
+            stats = zorder_layout_append(
+                sess,
+                req["path"],
+                sess.sql(req["deltaSql"]),
+                batch_id=int(req["batchId"]) if "batchId" in req else None,
+                key_cols=list(key_cols) if key_cols else None,
+            )
+            self._reply(200, stats)
+        else:
+            self._reply(404, {"error": f"unknown op {op!r}"})
+
+    def _handle_sql(self, authed: str, effective, req: dict) -> None:
+        sql = req["sql"]
+        limit = check_limit(req.get("limit", DEFAULT_FETCH_LIMIT))
+        explain = bool(req.get("explain", False))
+        cursor = bool(req.get("cursor", False))
+        if cursor and explain:
+            raise ValueError("cursor and explain are exclusive")
+        explain_mode = str(req.get("explainMode", "formatted"))
+        if explain_mode not in (
+            "simple", "extended", "codegen", "cost", "formatted",
+        ):
+            raise ValueError(f"unknown explainMode {explain_mode!r}")
+        df = self._session(effective, authed).sql(sql)
+        if explain:
+            # plan-only mode: nothing executes, nothing fetches —
+            # the gateway answers "what would this cost" questions
+            # without touching the data (Kyuubi operation
+            # EXECUTE_STATEMENT with EXPLAIN, minus the round trip).
+            # scaleRisks turns plan inspection into plan VETTING:
+            # the doctor's findings (cartesian / nested-loop /
+            # global-window / row-python / unpruned-scan) ride
+            # along so a user sees the 100 TB anti-patterns before
+            # submitting, not in a post-mortem.
+            from nineinfra_spark import doctor as _doctor
+
+            qe = df._jdf.queryExecution()  # noqa: SLF001
+            self._reply(
+                200,
+                {
+                    "columns": df.columns,
+                    "plan": qe.explainString(
+                        self.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(  # noqa: SLF001, E501
+                            explain_mode
+                        )
                     ),
-                )
-                rows = df.limit(limit + 1).collect()
-                truncated = len(rows) > limit
-                rows = rows[:limit]
-                self._reply(
-                    200,
-                    {
-                        "columns": df.columns,
-                        "rows": [list(r) for r in rows],
-                        "rowCount": len(rows),
-                        "truncated": truncated,
-                    },
-                )
-            elif op == "bloom-probe":
-                from nineinfra_spark.operators.bloomindex import (
-                    bloom_skipping_read,
-                )
-
-                keys = req["keys"]
-                if not isinstance(keys, list):
-                    raise TypeError("keys must be a JSON array")
-                limit = int(req.get("limit", DEFAULT_FETCH_LIMIT))
-                if limit < 0 or limit > MAX_FETCH_LIMIT:
-                    raise ValueError(
-                        f"limit must be in [0, {MAX_FETCH_LIMIT}], got {limit}"
-                    )
-                out, bstats = bloom_skipping_read(sess, req["path"], keys)
-                rows = out.limit(limit + 1).collect()
-                truncated = len(rows) > limit
-                rows = rows[:limit]
-                self._reply(
-                    200,
-                    {
-                        "columns": out.columns,
-                        "rows": [list(r) for r in rows],
-                        "rowCount": len(rows),
-                        "truncated": truncated,
-                        "filesTotal": bstats["files_total"],
-                        "filesHit": bstats["files_hit"],
-                        "filesSkipped": bstats["files_skipped"],
-                    },
-                )
-            elif op == "zorder-append":
-                from nineinfra_spark.operators.zorder import (
-                    zorder_layout_append,
-                )
-
-                delta = sess.sql(req["deltaSql"])
-                key_cols = req.get("keyCols")
-                stats = zorder_layout_append(
-                    sess,
-                    req["path"],
-                    delta,
-                    batch_id=(
-                        int(req["batchId"]) if "batchId" in req else None
-                    ),
-                    key_cols=list(key_cols) if key_cols else None,
-                )
-                self._reply(200, stats)
-            else:
-                self._reply(404, {"error": f"unknown op {op!r}"})
-        except KeyError as exc:
-            self._reply(400, {"error": f"bad request: missing field {exc}"})
-        except Exception as exc:
-            self._reply(400, {"error": str(exc)[:4000]})
+                    "scaleRisks": [
+                        {"kind": f.kind, "line": f.line, "hint": f.hint}
+                        for f in _doctor.scale_risks(df)
+                    ],
+                },
+            )
+            return
+        if cursor:
+            # Kyuubi's ExecuteStatement→FetchResults loop: hand
+            # back a handle; rows stream page-by-page from the
+            # statements endpoint. prefetchPartitions=False keeps
+            # driver residency to ONE partition at a time — the
+            # sanctioned unbounded-extraction path.
+            stmt_id = uuid.uuid4().hex
+            st = _Statement(
+                df.columns,
+                df.toLocalIterator(prefetchPartitions=False),
+                owner=authed,
+            )
+            evicted = []
+            with self.statements_lock:
+                self.statements[stmt_id] = st
+                while len(self.statements) > MAX_STATEMENTS:
+                    evicted.append(self.statements.popitem(last=False)[1])
+            for ev in evicted:  # release iterators outside the lock
+                ev.close()
+            self._reply(
+                200, {"statementId": stmt_id, "columns": df.columns}
+            )
+            return
+        payload = _resultset(df, limit)
+        if effective is not None:
+            payload["effectiveUser"] = effective
+        self._reply(200, payload)
 
     def do_POST(self) -> None:  # noqa: N802 — http.server API
         parts = self.path.strip("/").split("/")
@@ -522,122 +583,34 @@ class _Handler(BaseHTTPRequestHandler):
             and parts[:3] == ["api", "v1", "statements"]
             and parts[4] == "fetch"
         ):
-            self._handle_fetch(parts[3])
-            return
-        if len(parts) == 4 and parts[:3] == ["api", "v1", "ops"]:
-            self._handle_op(parts[3])
-            return
-        if self.path != "/api/v1/sql":
+            handle = functools.partial(self._handle_fetch, parts[3])
+        elif len(parts) == 4 and parts[:3] == ["api", "v1", "ops"]:
+            handle = functools.partial(self._handle_op, parts[3])
+        elif self.path == "/api/v1/sql":
+            handle = self._handle_sql
+        else:
             self._reply(404, {"error": f"unknown path {self.path}"})
             return
-        authed = self._authenticate()
-        if authed is None:
-            self._reply_unauthorized()
-            return
-        effective, deny = self._resolve_proxy_user(authed)
-        if deny is not None:
-            self._reply(403, {"error": deny})
+        pre = self._preamble()
+        if pre is None:
             return
         try:
-            req = json.loads(self._read_body() or b"{}")
-            if not isinstance(req, dict):
-                raise TypeError(f"body must be a JSON object, got {type(req).__name__}")
-            sql = req["sql"]
-            limit = int(req.get("limit", DEFAULT_FETCH_LIMIT))
-            if limit < 0 or limit > MAX_FETCH_LIMIT:
-                raise ValueError(f"limit must be in [0, {MAX_FETCH_LIMIT}], got {limit}")
-            explain = bool(req.get("explain", False))
-            cursor = bool(req.get("cursor", False))
-            if cursor and explain:
-                raise ValueError("cursor and explain are exclusive")
-            explain_mode = str(req.get("explainMode", "formatted"))
-            if explain_mode not in (
-                "simple", "extended", "codegen", "cost", "formatted",
-            ):
-                raise ValueError(f"unknown explainMode {explain_mode!r}")
-        except (KeyError, TypeError, ValueError, json.JSONDecodeError) as exc:
-            self._reply(400, {"error": f"bad request: {exc}"})
-            return
-        try:
-            df = self._session(effective, authed).sql(sql)
-            if explain:
-                # plan-only mode: nothing executes, nothing fetches —
-                # the gateway answers "what would this cost" questions
-                # without touching the data (Kyuubi operation
-                # EXECUTE_STATEMENT with EXPLAIN, minus the round trip).
-                # scaleRisks turns plan inspection into plan VETTING:
-                # the doctor's findings (cartesian / nested-loop /
-                # global-window / row-python / unpruned-scan) ride
-                # along so a user sees the 100 TB anti-patterns before
-                # submitting, not in a post-mortem.
-                from nineinfra_spark import doctor as _doctor
-
-                qe = df._jdf.queryExecution()  # noqa: SLF001
-                self._reply(
-                    200,
-                    {
-                        "columns": df.columns,
-                        "plan": qe.explainString(
-                            self.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(  # noqa: SLF001, E501
-                                explain_mode
-                            )
-                        ),
-                        "scaleRisks": [
-                            {"kind": f.kind, "line": f.line, "hint": f.hint}
-                            for f in _doctor.scale_risks(df)
-                        ],
-                    },
-                )
-                return
-            if cursor:
-                # Kyuubi's ExecuteStatement→FetchResults loop: hand
-                # back a handle; rows stream page-by-page from the
-                # statements endpoint. prefetchPartitions=False keeps
-                # driver residency to ONE partition at a time — the
-                # sanctioned unbounded-extraction path.
-                import uuid as _uuid
-
-                stmt_id = _uuid.uuid4().hex
-                st = _Statement(
-                    df.columns,
-                    df.toLocalIterator(prefetchPartitions=False),
-                    owner=authed,
-                )
-                evicted = []
-                with self.statements_lock:
-                    self.statements[stmt_id] = st
-                    while len(self.statements) > MAX_STATEMENTS:
-                        evicted.append(self.statements.popitem(last=False)[1])
-                for ev in evicted:  # release iterators outside the lock
-                    ev.close()
-                self._reply(
-                    200, {"statementId": stmt_id, "columns": df.columns}
-                )
-                return
-            # fetch limit+1 to report truncation without a count() pass
-            rows = df.limit(limit + 1).collect()
-            truncated = len(rows) > limit
-            rows = rows[:limit]
-            payload = {
-                "columns": df.columns,
-                "rows": [list(r) for r in rows],
-                "rowCount": len(rows),
-                "truncated": truncated,
-            }
-            if effective is not None:
-                payload["effectiveUser"] = effective
-            self._reply(200, payload)
+            handle(*pre)
+        except KeyError as exc:
+            self._reply(400, {"error": f"bad request: missing field {exc}"})
         except Exception as exc:  # engine errors → structured 400, not a 500 stack
             self._reply(400, {"error": str(exc)[:4000]})
 
 
-class RestGateway:
-    """Handle for a running REST endpoint (returned by
-    :func:`start_rest_gateway`; ``Engine.close`` calls :meth:`stop`)."""
+class Gateway:
+    """Handle for a running frontend server — REST here, MySQL wire in
+    ``mysql_wire`` — serving on a daemon thread from construction
+    (``Engine.close`` calls :meth:`stop`)."""
 
-    def __init__(self, server: ThreadingHTTPServer, thread: threading.Thread):
+    def __init__(self, server: socketserver.BaseServer):
         self._server = server
-        self._thread = thread
+        self._thread = threading.Thread(target=server.serve_forever, daemon=True)
+        self._thread.start()
 
     @property
     def port(self) -> int:
@@ -654,7 +627,7 @@ def start_rest_gateway(
     port: int = 0,
     auth: Callable[[str, str], bool] | None = None,
     proxy_acl: dict | None = None,
-) -> RestGateway:
+) -> Gateway:
     """Serve the REST SQL frontend on ``port`` (0 = OS-assigned; read
     the bound port from the returned handle). Binds immediately; the
     accept loop runs on a daemon thread. ``auth``: optional
@@ -678,7 +651,4 @@ def start_rest_gateway(
             "statements_lock": threading.Lock(),
         },
     )
-    server = ThreadingHTTPServer(("127.0.0.1", port), handler)
-    thread = threading.Thread(target=server.serve_forever, daemon=True)
-    thread.start()
-    return RestGateway(server, thread)
+    return Gateway(ThreadingHTTPServer(("127.0.0.1", port), handler))

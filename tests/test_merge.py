@@ -250,6 +250,29 @@ def test_retryable_race_classifier(spark):
     _cleanup_prefix(spark, "clsf_t")
 
 
+def test_retryable_race_classifier_uses_getcondition(spark):
+    """The classifier reads the error condition through Spark 4's
+    ``getCondition`` (no deprecation FutureWarning) and falls back to
+    ``getErrorClass`` on exceptions that only have the older name."""
+    import warnings
+
+    from pyspark.sql.utils import AnalysisException
+
+    from nineinfra_spark.operators.merge import _is_retryable_race
+
+    with pytest.raises(AnalysisException) as not_found:
+        spark.table("no_such_table_xyz_12345")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        assert _is_retryable_race(not_found.value)
+
+    class _OldApi(Exception):
+        def getErrorClass(self):  # noqa: N802 — the pyspark name
+            return "TABLE_OR_VIEW_NOT_FOUND"
+
+    assert _is_retryable_race(_OldApi("renamed away"))
+
+
 def test_versioned_merge_failure_leaves_no_stage(spark, monkeypatch):
     """When the version CAS is exhausted (here: forced by pinning the
     observed head version to one whose archive slot is already taken),

@@ -233,6 +233,31 @@ def test_com_init_db(gw):
     c.close()
 
 
+def test_stop_is_prompt_and_ends_live_connections(spark):
+    """stop() returns promptly, the serving thread has exited, a
+    connection opened before stop() sees EOF or a reset, and the port
+    no longer accepts."""
+    import time
+
+    g = start_mysql_gateway(spark, port=0)
+    c = Client(g.port)
+    try:
+        assert c.handshake()["ok"][0] == 0x00
+        t0 = time.perf_counter()
+        g.stop()
+        assert time.perf_counter() - t0 < 1.0
+        assert not g._thread.is_alive()
+        c.sock.settimeout(5)
+        try:
+            assert c.sock.recv(1) == b""
+        except ConnectionResetError:
+            pass
+        with pytest.raises(ConnectionRefusedError):
+            socket.create_connection(("127.0.0.1", g.port), timeout=5)
+    finally:
+        c.close()
+
+
 class AuthClient(Client):
     """Client that answers the server's AuthSwitchRequest to
     mysql_clear_password with a cleartext password."""

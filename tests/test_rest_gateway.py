@@ -697,6 +697,19 @@ def test_cursor_eviction_is_explicit_404_and_releases_iterator(rest):
         R.MAX_STATEMENTS = old_cap
 
 
+def test_cursor_fetch_non_object_body_400(rest):
+    """A fetch body that parses as JSON but is not an object gets the
+    same 400 as /sql — not a dropped connection — and the statement
+    stays open for a well-formed fetch."""
+    sid = _post(rest, {"sql": "SELECT 1 AS x", "cursor": True})["statementId"]
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _post_path(rest, f"/api/v1/statements/{sid}/fetch", [1])
+    assert e.value.code == 400
+    assert "bad request" in json.loads(e.value.read())["error"]
+    page = _post_path(rest, f"/api/v1/statements/{sid}/fetch", {"max": 1})
+    assert page["rows"] == [[1]]
+
+
 def test_statement_fetch_after_close_raises_not_truncates():
     """r10 ADVICE race: a handler that resolved the statement BEFORE
     the LRU pop acquires the lock AFTER close() already ran. The fetch
@@ -956,3 +969,56 @@ def test_negative_content_length_is_400_not_a_hang(rest):
         assert b"Content-Length" in resp.read()
     finally:
         conn.close()
+
+
+# -- the shared limit check and bounded fetch on the ops endpoints ----------
+
+OPS_FETCH = ["table-changes", "bloom-probe"]
+
+
+@pytest.fixture(scope="module")
+def ops_requests(spark, tmp_path_factory):
+    """Request bodies for the two bounded-fetch ops endpoints, each
+    answering exactly 20 rows without a limit."""
+    from nineinfra_spark.operators.bloomindex import bloom_index_write
+
+    for t in ("rest_lim_tc", "rest_lim_tc__v0"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    # 10 deletes + 10 inserts between v0 and the live table
+    spark.range(0, 10).selectExpr("id AS k").write.saveAsTable("rest_lim_tc__v0")
+    spark.range(10, 20).selectExpr("id AS k").write.saveAsTable("rest_lim_tc")
+    path = str(tmp_path_factory.mktemp("bloom_lim") / "idx")
+    bloom_index_write(
+        spark.range(0, 60).selectExpr(
+            "id % 5 AS day", "CAST(id % 3 AS STRING) AS key", "id AS payload"
+        ),
+        path, "day", "key", 4,
+    )
+    yield {
+        "table-changes": {"table": "rest_lim_tc", "keyCols": ["k"]},
+        "bloom-probe": {"path": path, "keys": ["0"]},
+    }
+    for t in ("rest_lim_tc", "rest_lim_tc__v0"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+@pytest.mark.parametrize("op", OPS_FETCH)
+@pytest.mark.parametrize("limit", [10**9, -5])
+def test_ops_limit_out_of_range_rejected(rest, ops_requests, op, limit):
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _post_path(rest, f"/api/v1/ops/{op}", {**ops_requests[op], "limit": limit})
+    assert e.value.code == 400
+    assert "limit" in json.loads(e.value.read())["error"]
+
+
+@pytest.mark.parametrize("op", OPS_FETCH)
+def test_ops_limit_truncates(rest, ops_requests, op):
+    from nineinfra_spark.rest import MAX_FETCH_LIMIT
+
+    capped = _post_path(rest, f"/api/v1/ops/{op}", {**ops_requests[op], "limit": 3})
+    assert (capped["rowCount"], capped["truncated"]) == (3, True)
+    assert len(capped["rows"]) == 3
+    full = _post_path(
+        rest, f"/api/v1/ops/{op}", {**ops_requests[op], "limit": MAX_FETCH_LIMIT}
+    )
+    assert (full["rowCount"], full["truncated"]) == (20, False)
