@@ -29,11 +29,14 @@ item 2).
 Each query is forced end-to-end with a ``noop``-format write (full
 execution of every partition, no driver-side collect). After one
 warm-up pass (JVM/codegen startup not attributed to the plan), the
-query is timed ``$SPARK_GRAFT_BENCH_RUNS`` times (default 3) and the
-reported figure is the MEDIAN — this VM's wall times drift up to
-~1.6× run-to-run, and a median of 3 suppresses that noise enough for
-round-over-round deltas to mean something. The emitted JSON carries
-``"timing": "median_of_<N>"`` so readers know the method.
+query is timed ``RUNS`` (3) times and the reported figure is the
+MEDIAN — this VM's wall times drift up to ~1.6× run-to-run, and a
+median of 3 suppresses that noise enough for round-over-round deltas
+to mean something. The emitted JSON carries
+``"timing": "median_of_3"`` so readers know the method, and ``cpus``
+(the session's ``defaultParallelism``) so stamps taken at different
+core counts are never compared as if alike. ``warm_corpus`` and
+``timed_runs`` are this timing loop; ``scripts/profile.py`` reuses them.
 
 Also emits q9/q11/q16/q20 (the synthetic-partsupp queries) since r6.
 """
@@ -46,6 +49,9 @@ import statistics
 import sys
 import time
 
+#: Timed runs per query (after one untimed warm-up run); the median is reported.
+RUNS = 3
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Headline set: the TPC-H spine + one representative per operator family.
 # Extend as new families land (keep this list in sync with SURVEY.md §2).
@@ -187,6 +193,29 @@ def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def warm_corpus(spark, sf_dir: str) -> None:
+    """Untimed corpus warm-up: read the big tables end-to-end once so a
+    cold OS page cache is paid here, never inside a timed sample —
+    without this, a one-off cache miss on lineitem can masquerade as a
+    5× per-query regression (BENCH_r07's q6 reading)."""
+    for t in ("lineitem", "orders", "documents", "embeddings", "events"):
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(path):
+            _force(spark.read.parquet(path))
+
+
+def timed_runs(fn, spark, sf_dir: str) -> list[float]:
+    """One untimed warm-up run (JVM JIT, codegen, file listing), then
+    ``RUNS`` timed runs of build + forced execution; their walls."""
+    _force(fn(spark, sf_dir))
+    samples = []
+    for _ in range(RUNS):
+        t0 = time.perf_counter()
+        _force(fn(spark, sf_dir))
+        samples.append(time.perf_counter() - t0)
+    return samples
+
+
 def _calibrate(spark) -> dict:
     """Fixed-work, single-thread calibration probe (UNTIMED — never
     part of the headline value). Measures how fast THIS host runs a
@@ -229,7 +258,7 @@ def _calibrate(spark) -> dict:
 
 
 def main() -> int:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = SF_DIR
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
@@ -251,17 +280,8 @@ def main() -> int:
 
     from nineinfra_spark.plans import registry
 
-    n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
     available = set(registry.names())
-
-    # Untimed corpus warm-up: read the big tables end-to-end once so a
-    # cold OS page cache is paid here, never inside a timed sample —
-    # without this, a one-off cache miss on lineitem can masquerade as
-    # a 5× per-query regression (BENCH_r07's q6 reading).
-    for t in ("lineitem", "orders", "documents", "embeddings", "events"):
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            _force(spark.read.parquet(path))
+    warm_corpus(spark, sf_dir)
 
     # Untimed host-speed probe (after the JVM is warm, before any
     # timed sample): see _calibrate. Run once more at the end so a
@@ -272,13 +292,7 @@ def main() -> int:
     for name in HEADLINE:
         if name not in available:
             continue
-        fn = registry.get(name).fn
-        _force(fn(spark, sf_dir))  # warm-up: JVM JIT, codegen, file listing
-        samples = []
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            _force(fn(spark, sf_dir))
-            samples.append(time.perf_counter() - t0)
+        samples = timed_runs(registry.get(name).fn, spark, sf_dir)
         timings[name] = round(statistics.median(samples), 4)
         # Per-query channel the driver can parse from a bounded stdout
         # tail (r16 verdict item 1: the full map outgrew the 2000-char
@@ -295,9 +309,10 @@ def main() -> int:
         "metric": "headline_total_wall",
         "value": round(sum(timings.values()), 4),
         "unit": "sec",
-        "timing": f"median_of_{n_runs}",
+        "timing": f"median_of_{RUNS}",
         "queries": timings,
         "sf": sf,
+        "cpus": spark.sparkContext.defaultParallelism,
         "started_utc": started_utc,
         "host_load_1m": {
             "start": load_start,
@@ -328,6 +343,7 @@ def main() -> int:
         "value": result["value"],
         "unit": "sec",
         "sf": sf,
+        "cpus": result["cpus"],
         "n_queries": len(timings),
         "timing": result["timing"],
         # host-speed stamp (see _calibrate): py+jvm single-thread

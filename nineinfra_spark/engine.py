@@ -447,31 +447,6 @@ class Engine:
 
         return readers.read_parquet(self.spark, path)
 
-    def read_orc(self, path: str) -> DataFrame:
-        from nineinfra_spark.sources import readers
-
-        return readers.read_orc(self.spark, path)
-
-    def read_csv(self, path: str, schema=None, **options) -> DataFrame:
-        from nineinfra_spark.sources import readers
-
-        return readers.read_csv(self.spark, path, schema=schema, **options)
-
-    def read_json(self, path: str, schema=None, **options) -> DataFrame:
-        from nineinfra_spark.sources import readers
-
-        return readers.read_json(self.spark, path, schema=schema, **options)
-
-    def read_text(self, path: str) -> DataFrame:
-        from nineinfra_spark.sources import readers
-
-        return readers.read_text(self.spark, path)
-
-    def read_jdbc(self, url: str, table: str, **options) -> DataFrame:
-        from nineinfra_spark.sources import readers
-
-        return readers.read_jdbc(self.spark, url, table, **options)
-
     def save_as_table(self, df: DataFrame, name: str, mode: str = "error",
                       partition_by=None) -> None:
         from nineinfra_spark.sources import writers

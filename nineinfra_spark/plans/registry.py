@@ -7,10 +7,15 @@ columns sorted by name. Therefore every registered query must
 (a) alias every computed column identically on both sides and
 (b) produce bit-stable values (round floating aggregates; use
 deterministic tie-breaks in any top-k).
+
+``driver_vhash`` is that value hash and ``duck_connect`` that oracle
+session; ``scripts/check_query.py`` and ``tests/conftest.py`` share them.
 """
 
 from __future__ import annotations
 
+import hashlib
+import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -138,3 +143,31 @@ def get(name: str) -> RegisteredQuery:
 
 def names() -> list[str]:
     return _ordered_names()
+
+
+def driver_rows(df) -> list[str]:
+    """A pandas frame's rows as the driver compares them: columns sorted
+    by name, every cell stringified, rows sorted. Cells are compared as
+    text, so ``740`` and ``740.0`` differ."""
+    df = df[sorted(df.columns)]
+    return sorted(repr([str(v) for v in r]) for r in df.itertuples(index=False, name=None))
+
+
+def driver_vhash(df) -> str:
+    """The driver's order-insensitive value hash over ``driver_rows``."""
+    return hashlib.sha256("\n".join(driver_rows(df)).encode()).hexdigest()
+
+
+def duck_connect(sf_dir: str):
+    """DuckDB connection with each ``{sf_dir}/{t}.parquet`` registered as
+    view ``t``, matching the driver's oracle setup."""
+    import duckdb
+
+    from nineinfra_spark.engine import TPCH_TABLES
+
+    con = duckdb.connect()
+    for t in TPCH_TABLES:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(path):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    return con

@@ -1,9 +1,8 @@
 """Median-of-N bench stamping protocol (r13 verdict item 6).
 
-Run ``bench.py`` N times (default 3; env ``SPARK_GRAFT_STAMP_RUNS``
-sets the exact count, floor 1 — a committed stamp should still use
->= 3) on the closed tree, keep the MEDIAN run's full artifact, and record
-ALL N headline totals inside it as ``"runs": [..]`` — keeping
+Run ``bench.py`` N = 3 times on the closed tree, keep the MEDIAN
+run's full artifact, and record ALL N headline totals inside it as
+``"runs": [..]`` — keeping
 whichever run happened to be fast is a one-sided filter; the median
 of N complete runs is the defensible stamp on a VM whose wall times
 band up to ~1.6× with host load. Each underlying run still uses
@@ -20,7 +19,7 @@ import os
 import subprocess
 import sys
 
-N = max(1, int(os.environ.get("SPARK_GRAFT_STAMP_RUNS", "3")))
+N = 3
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FULL = os.path.join(REPO, "BENCH_FULL.json")
 
@@ -42,8 +41,7 @@ def main() -> int:
             flush=True,
         )
     totals = [a["value"] for a in artifacts]
-    order = sorted(range(N), key=lambda j: totals[j])
-    med = artifacts[order[N // 2]]  # upper median for even N
+    med = sorted(artifacts, key=lambda a: a["value"])[N // 2]
     med["runs"] = totals
     with open(FULL, "w") as f:
         json.dump(med, f, indent=1)

@@ -1,48 +1,37 @@
-"""Dev harness: compare selected queries against their DuckDB oracles.
+"""Driver check: run registered queries on a vanilla SparkSession (not
+the Engine, as the grading driver does) and compare each with its DuckDB
+oracle by row count, schema and the driver's order-insensitive value hash.
 
 Usage: python scripts/check_query.py [name ...] [--sf DIR]
-No names → all registered queries. Prints per-query status and, on
-mismatch, the first differing rows from both sides.
+
+Smokes ``entry()`` first and counts every oracle key without a query (a
+renamed or retired query the driver would silently never compare) as a
+failure. No names → every query, in export order. Prints one line per
+query (``OK``, ``rows-only (N)`` when there is no oracle, or the
+mismatch with the first differing rows from both sides), then
+``FAILS: N``; exits 1 when N > 0.
 """
-import hashlib
 import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-import duckdb
-import pandas as pd
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if __name__ == "__main__":
+    # The repo, not scripts/, heads the path: scripts/profile.py would
+    # shadow the stdlib ``profile`` module that pyspark imports.
+    sys.path[0] = REPO
 from pyspark.sql import SparkSession
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def vhash(df: pd.DataFrame) -> str:
-    df = df[sorted(df.columns)]
-    rows = sorted(repr([str(v) for v in r]) for r in df.itertuples(index=False, name=None))
-    return hashlib.sha256("\n".join(rows).encode()).hexdigest()[:16]
-
-
-def canon_rows(df: pd.DataFrame):
-    df = df[sorted(df.columns)]
-    return sorted((repr([str(v) for v in r]), r) for r in df.itertuples(index=False, name=None))
+from nineinfra_spark.plans.registry import driver_rows, driver_vhash, duck_connect
 
 
 def main() -> int:
     args = sys.argv[1:]
     sf = "/root/testdata/sf0.01"
-    names = []
-    i = 0
-    while i < len(args):
-        if args[i] == "--sf":
-            sf = args[i + 1]
-            i += 2
-        else:
-            names.append(args[i])
-            i += 1
+    if "--sf" in args:
+        i = args.index("--sf")
+        sf = args[i + 1]
+        del args[i : i + 2]
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -55,18 +44,15 @@ def main() -> int:
 
     import __spark_entry__ as E
 
+    df = E.entry(spark)
+    print(f"entry(): {len(df.collect())} rows, schema={[f.name for f in df.schema]}")
     qs, os_ = E.queries(), E.oracle_sql()
-    if not names:
-        names = list(qs)
+    orphans = sorted(set(os_) - set(qs))
+    print(f"queries={len(qs)} oracles={len(os_)} orphan_oracles={orphans}")
+    fails = len(orphans)
 
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-
-    fails = 0
-    for name in names:
+    con = duck_connect(sf)
+    for name in args or list(qs):
         t0 = time.time()
         try:
             got = qs[name](spark, sf).toPandas()
@@ -85,7 +71,7 @@ def main() -> int:
             continue
         ok_n = len(got) == len(want)
         ok_s = sorted(got.columns) == sorted(want.columns)
-        ok_h = vhash(got) == vhash(want)
+        ok_h = driver_vhash(got) == driver_vhash(want)
         if ok_n and ok_s and ok_h:
             print(f"  {name}: OK ({len(got)} rows) [{time.time()-t0:.1f}s]")
             continue
@@ -94,16 +80,12 @@ def main() -> int:
         if not ok_s:
             print(f"    spark cols:  {sorted(got.columns)}")
             print(f"    oracle cols: {sorted(want.columns)}")
-        if ok_s:
-            g, w = canon_rows(got), canon_rows(want)
-            gset = {k for k, _ in g}
-            wset = {k for k, _ in w}
-            only_g = [r for k, r in g if k not in wset][:5]
-            only_w = [r for k, r in w if k not in gset][:5]
-            for r in only_g:
-                print(f"    spark-only:  {r}")
-            for r in only_w:
-                print(f"    oracle-only: {r}")
+            continue
+        g, w = set(driver_rows(got)), set(driver_rows(want))
+        for r in sorted(g - w)[:5]:
+            print(f"    spark-only:  {r}")
+        for r in sorted(w - g)[:5]:
+            print(f"    oracle-only: {r}")
     print("FAILS:", fails)
     return 1 if fails else 0
 

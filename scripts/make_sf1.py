@@ -23,6 +23,11 @@ from __future__ import annotations
 import os
 import sys
 
+if __name__ == "__main__":
+    # The repo, not scripts/, heads the path: scripts/profile.py would
+    # shadow the stdlib ``profile`` module that pyspark imports.
+    sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 

@@ -1,15 +1,19 @@
-"""Shared fixtures: one SparkSession per test session + DuckDB oracle."""
+"""Shared fixtures: one SparkSession per test session + DuckDB oracle.
+
+The oracle session (``duck_connect``) and the driver's value hash
+(``driver_vhash``) live in ``nineinfra_spark/plans/registry.py``, shared
+with ``scripts/check_query.py``."""
 
 from __future__ import annotations
 
 import math
 import os
 
-import duckdb
 import pandas as pd
 import pytest
 
-from nineinfra_spark.engine import TPCH_TABLES, Engine, EngineConfig
+from nineinfra_spark.engine import Engine, EngineConfig
+from nineinfra_spark.plans.registry import driver_vhash, duck_connect
 
 SF_SMOKE = os.environ.get("NINE_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_ORACLE = os.environ.get("NINE_ORACLE_SF_DIR", "/root/testdata/sf0.01")
@@ -27,17 +31,6 @@ def spark(engine):
     return engine.spark
 
 
-def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    """DuckDB connection with the testdata tables registered as views,
-    matching the driver's oracle setup."""
-    con = duckdb.connect()
-    for t in TPCH_TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
-    return con
-
-
 def _canon(df: pd.DataFrame) -> pd.DataFrame:
     """Canonicalize a result frame the way the driver's compare does:
     columns sorted by name, rows sorted by all columns."""
@@ -45,18 +38,6 @@ def _canon(df: pd.DataFrame) -> pd.DataFrame:
     if len(df):
         df = df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
     return df
-
-
-def _driver_vhash(df: pd.DataFrame) -> str:
-    """Mirror of the driver's order-insensitive value hash (cells
-    stringified, rows sorted) — see scripts/drive_driver_contract.py."""
-    import hashlib
-
-    df = df[sorted(df.columns)]
-    rows = sorted(
-        repr([str(v) for v in r]) for r in df.itertuples(index=False, name=None)
-    )
-    return hashlib.sha256("\n".join(rows).encode()).hexdigest()
 
 
 def _norm_cell(v):
@@ -116,7 +97,7 @@ def assert_matches_oracle(spark, name: str, fn, oracle: str, sf_dir: str = SF_OR
     # though == passes above. Reproduce that strictness here so dtype
     # drift (e.g. DuckDB HUGEINT sums surfacing as float) is caught in
     # the fast loop, not by the gate.
-    assert _driver_vhash(g) == _driver_vhash(w), (
+    assert driver_vhash(g) == driver_vhash(w), (
         f"{name}: driver-style value hash differs — dtype/format "
         f"mismatch (e.g. int vs float column)? spark dtypes="
         f"{dict(g.dtypes.astype(str))} oracle dtypes={dict(w.dtypes.astype(str))}"
