@@ -16,8 +16,10 @@ JSON to stdout, in order:
 
 3. as the FINAL line, a <200-char summary with the same metric/value
    fields plus ``calib_sec`` (the full 4-decimal map is also written
-   to ``BENCH_FULL.json`` beside this script so no artifact
-   truncation can lose the per-query numbers).
+   beside this script, to ``BENCH_FULL.json`` — or, when that file
+   was stamped at another cpu count, to ``BENCH_FULL_c{cpus}.json``,
+   named in the summary's ``full`` field — so no artifact truncation
+   can lose the per-query numbers).
 
 ``calib_sec`` is an UNTIMED fixed-work single-thread host-speed probe
 (Python + JVM legs, ~2 s nominal, run before and after the timed
@@ -216,6 +218,44 @@ def timed_runs(fn, spark, sf_dir: str) -> list[float]:
     return samples
 
 
+def full_name(out_dir: str, cpus: int) -> str:
+    """File name for this run's full per-query map: ``BENCH_FULL.json``
+    unless the one already in ``out_dir`` was stamped at another cpu
+    count (a missing ``cpus`` field counts as another), which is never
+    overwritten — the run then goes to ``BENCH_FULL_c{cpus}.json``."""
+    try:
+        with open(os.path.join(out_dir, "BENCH_FULL.json")) as f:
+            stamped = json.load(f).get("cpus")
+    except FileNotFoundError:
+        return "BENCH_FULL.json"
+    except (OSError, ValueError, AttributeError):
+        stamped = None
+    return "BENCH_FULL.json" if stamped == cpus else f"BENCH_FULL_c{cpus}.json"
+
+
+def summary_line(result: dict, full: str) -> str:
+    """The LAST stdout line: a short (<200 char) summary guaranteed to
+    fit in any tail window the driver keeps — same metric/value
+    contract, full map referenced by file name ``full``."""
+    calib = result["calib"]["start"]
+    return json.dumps(
+        {
+            "metric": "headline_total_wall",
+            "value": result["value"],
+            "unit": "sec",
+            "sf": result["sf"],
+            "cpus": result["cpus"],
+            "n_queries": len(result["queries"]),
+            "timing": result["timing"],
+            # host-speed stamp (see _calibrate): py+jvm single-thread
+            # seconds at run start — divide two runs' values to band-
+            # normalize their walls
+            "calib_sec": round(calib["py_sec"] + calib["jvm_sec"], 3),
+            "full": full,
+        }
+    )
+
+
 def _calibrate(spark) -> dict:
     """Fixed-work, single-thread calibration probe (UNTIMED — never
     part of the headline value). Measures how fast THIS host runs a
@@ -327,34 +367,14 @@ def main() -> int:
     compact = dict(result)
     compact["queries"] = {k: round(v, 2) for k, v in timings.items()}
     print(json.dumps(compact, separators=(",", ":")), flush=True)
+    here = os.path.dirname(os.path.abspath(__file__))
+    full = full_name(here, result["cpus"])
     try:
-        full_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"
-        )
-        with open(full_path, "w") as f:
+        with open(os.path.join(here, full), "w") as f:
             json.dump(result, f, indent=1)
     except OSError:
         pass
-    # LAST line is a short (<200 char) summary guaranteed to fit in
-    # any tail window the driver keeps: same metric/value contract,
-    # full map referenced by file.
-    summary = {
-        "metric": "headline_total_wall",
-        "value": result["value"],
-        "unit": "sec",
-        "sf": sf,
-        "cpus": result["cpus"],
-        "n_queries": len(timings),
-        "timing": result["timing"],
-        # host-speed stamp (see _calibrate): py+jvm single-thread
-        # seconds at run start — divide two runs' values to band-
-        # normalize their walls
-        "calib_sec": round(
-            calib_start["py_sec"] + calib_start["jvm_sec"], 3
-        ),
-        "full": "BENCH_FULL.json",
-    }
-    print(json.dumps(summary), flush=True)
+    print(summary_line(result, full), flush=True)
     engine.close()
     return 0
 

@@ -9,9 +9,12 @@ pushdown stay intact because nothing here forces materialization.
 
 from __future__ import annotations
 
-import functools as _functools
 import os
+import stat
+import threading
 import warnings
+from collections import OrderedDict
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,9 +24,34 @@ from pyspark.sql import types as T
 #: long instead of failing (Spark has no nanosecond timestamp type).
 NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
+#: Session confs that change Spark's parquet -> Spark schema
+#: conversion; their values are part of every schema-cache key.
+SCHEMA_CONFS = (
+    NANOS_CONF,
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+
+#: LRU bound of the schema cache (one entry per local path).
+SCHEMA_CACHE_MAX = 256
+
+
+class _Schema(NamedTuple):
+    files: tuple  # _file_signature of the path
+    nanos: frozenset[str] | None  # _nanos_ts_columns of those files
+    confs: tuple  # SCHEMA_CONFS values of the inferring session
+    raw: T.StructType  # Spark's inferred (pre-rebuild) schema
+
+
+_schemas: OrderedDict[str, _Schema] = OrderedDict()
+_schemas_lock = threading.Lock()
+
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet scan with nanos-timestamp tolerance.
+    """Parquet scan with nanos-timestamp tolerance and a schema cache.
 
     ``events.parquet`` in the testdata stores ``ts`` as INT64
     TIMESTAMP(NANOS), which Spark's reader rejects by default. The
@@ -35,15 +63,45 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     nanos → micros, exactly like DuckDB's reader, so both engines see
     identical values.
 
-    CAVEAT (remote paths): when the footer cannot be probed (s3a://
-    and other non-local schemes, or no pyarrow), NO rebuild runs —
-    nanos-annotated columns come back as raw BIGINT epoch-nanos, a
-    schema divergence from the local-path read of the same file. A
-    ``UserWarning`` is emitted; callers on remote storage that expect
-    nanosecond timestamps must rebuild those columns themselves (see
-    ``_rebuild_nanos_ts`` for the truncation expression).
+    Schema cache: Spark infers a parquet schema with one job per read.
+    A local path's inferred schema and nanos column set are kept
+    process-wide, keyed on the absolute path, the sorted
+    ``(relative path, size, mtime_ns, inode)`` of every file under it,
+    and the session's ``SCHEMA_CONFS`` values; a repeat read of
+    unchanged files passes the kept schema to Spark and starts no job.
+    Rewriting the files or reading from a session with other schema
+    confs infers afresh. One entry per path, LRU-bounded at
+    ``SCHEMA_CACHE_MAX``.
+
+    CAVEAT (remote paths): s3a:// and other non-local schemes are
+    never cached (no local file signature), and their footer cannot be
+    probed, so NO rebuild runs — nanos-annotated columns come back as
+    raw BIGINT epoch-nanos, a schema divergence from the local-path
+    read of the same file. A ``UserWarning`` is emitted; callers on
+    remote storage that expect nanosecond timestamps must rebuild
+    those columns themselves (see ``_rebuild_nanos_ts`` for the
+    truncation expression).
     """
-    nanos_cols = _nanos_ts_columns(path)
+    raw, nanos_cols = _parquet_schema(spark, path)
+    reader = spark.read if raw is None else spark.read.schema(raw)
+    return _rebuild_nanos_ts(reader.parquet(path), nanos_cols)
+
+
+def _parquet_schema(
+    spark: SparkSession, path: str
+) -> tuple[T.StructType | None, frozenset[str]]:
+    """Spark's raw inferred schema of ``path`` (``None`` for an
+    uncacheable remote path) and the footer's TIMESTAMP(NANOS)
+    columns, from the schema cache — inferring once on a miss. Sets
+    ``NANOS_CONF`` when those columns need it. Concurrent misses may
+    both infer; the later store wins with an equal entry."""
+    local = _local_path(path)
+    files = _file_signature(local) if local is not None else None
+    with _schemas_lock:
+        hit = _schemas.get(local) if files is not None else None
+    if hit is not None and hit.files != files:
+        hit = None
+    nanos_cols = hit.nanos if hit is not None else _nanos_ts_columns(path)
     if nanos_cols is None:
         # Footer unprobeable (path on a filesystem pyarrow can't open,
         # e.g. an s3a:// URI): set the conf defensively so a scan of
@@ -55,24 +113,61 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
             f"(no timestamp rebuild). Rebuild nanos columns downstream if "
             f"this path contains them.",
             UserWarning,
-            stacklevel=2,
+            stacklevel=3,
         )
         spark.conf.set(NANOS_CONF, "true")
-        nanos_cols = frozenset()
     elif nanos_cols:
         spark.conf.set(NANOS_CONF, "true")
-    df = spark.read.parquet(path)
-    return _rebuild_nanos_ts(df, nanos_cols)
+    if files is None:
+        return None, nanos_cols or frozenset()
+    confs = tuple(spark.conf.get(k, None) for k in SCHEMA_CONFS)
+    if hit is None or hit.confs != confs:
+        hit = _Schema(files, nanos_cols, confs, spark.read.parquet(path).schema)
+    with _schemas_lock:
+        _schemas[local] = hit
+        _schemas.move_to_end(local)
+        while len(_schemas) > SCHEMA_CACHE_MAX:
+            _schemas.popitem(last=False)
+    return hit.raw, nanos_cols or frozenset()
 
 
-@_functools.lru_cache(maxsize=256)
+def _local_path(path: str) -> str | None:
+    """Absolute local filesystem path of ``path``; ``None`` for a
+    remote scheme (s3a://, hdfs://)."""
+    if path.startswith("file://"):
+        path = path[len("file://"):]
+    elif "://" in path:
+        return None
+    return os.path.abspath(path)
+
+
+def _file_signature(path: str) -> tuple | None:
+    """Sorted ``(relative path, size, mtime_ns, inode)`` of the file at
+    ``path`` or of every file under it (a symlinked file is described
+    by its target, which is what Spark reads); ``None`` when it cannot
+    be listed."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (("", st.st_size, st.st_mtime_ns, st.st_ino),)
+        sig = []
+        for root, _dirs, names in os.walk(path):
+            for name in names:
+                f = os.path.join(root, name)
+                st = os.stat(f)
+                sig.append(
+                    (os.path.relpath(f, path), st.st_size, st.st_mtime_ns, st.st_ino)
+                )
+    except OSError:
+        return None
+    return tuple(sorted(sig))
+
+
 def _nanos_ts_columns(path: str) -> frozenset[str] | None:
     """Names of columns annotated TIMESTAMP(NANOS) in the parquet
     footer (file or directory). Driver-side footer read only — cost is
-    one metadata fetch, never a data scan. Cached per path (a path
-    whose files are REPLACED with a different schema mid-process would
-    need ``_nanos_ts_columns.cache_clear()`` — the write paths here
-    never do that).
+    one metadata fetch, never a data scan. ``read_parquet`` keeps the
+    result in its schema cache, keyed on the files' signature.
 
     Returns ``None`` when the footer cannot be probed at all (no
     pyarrow, or a path on a filesystem pyarrow can't open) — distinct
@@ -85,7 +180,7 @@ def _nanos_ts_columns(path: str) -> frozenset[str] | None:
         import pyarrow.dataset as pads
     except ImportError:
         return None
-    if "://" in path and not path.startswith("file://"):
+    if _local_path(path) is None:
         # Remote scheme (s3a://, hdfs://): Spark's Hadoop connectors
         # read these, but pyarrow here has no credentials/connector —
         # don't even attempt, report unknown.

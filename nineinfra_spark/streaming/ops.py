@@ -28,11 +28,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nineinfra_spark.sources.readers import (
-    NANOS_CONF,
-    _nanos_ts_columns,
-    _rebuild_nanos_ts,
-)
+from nineinfra_spark.sources.readers import _parquet_schema, _rebuild_nanos_ts
 
 
 STREAM_SRC_ROOT = "/tmp/nineinfra_stream_src"
@@ -160,7 +156,7 @@ def read_table_stream(
     up-front — file streams never infer). No timestamp rebuild; use
     ``read_events_stream`` for the events table's nanos handling."""
     staged = _staged_table_dir(sf_dir, table)
-    raw_schema = spark.read.parquet(staged).schema
+    raw_schema, _ = _parquet_schema(spark, staged)
     return spark.readStream.schema(raw_schema).options(**options).parquet(staged)
 
 
@@ -174,10 +170,7 @@ def read_events_stream(
     ``maxFilesPerTrigger="1"`` to force one micro-batch per arriving
     file — the incremental-replay shape)."""
     staged = _staged_events_dir(sf_dir)
-    nanos_cols = _nanos_ts_columns(staged) or frozenset()  # local dir: never None
-    if nanos_cols:
-        spark.conf.set(NANOS_CONF, "true")
-    raw_schema = spark.read.parquet(staged).schema
+    raw_schema, nanos_cols = _parquet_schema(spark, staged)
     raw = spark.readStream.schema(raw_schema).options(**options).parquet(staged)
     # Watermarks require TIMESTAMP (instant) — with the engine's UTC
     # session timezone the ntz→ltz cast preserves the wall-clock value.

@@ -21,19 +21,22 @@ import sys
 
 N = 3
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-FULL = os.path.join(REPO, "BENCH_FULL.json")
 
 
 def main() -> int:
     artifacts = []
     for i in range(N):
-        subprocess.run(
+        out = subprocess.run(
             [sys.executable, os.path.join(REPO, "bench.py")],
             check=True,
-            stdout=subprocess.DEVNULL,
+            stdout=subprocess.PIPE,
             stderr=subprocess.DEVNULL,
-        )
-        with open(FULL) as f:
+            text=True,
+        ).stdout
+        # the summary line names the artifact (BENCH_FULL.json, or
+        # BENCH_FULL_c{cpus}.json beside a stamp of another cpu count)
+        full = os.path.join(REPO, json.loads(out.splitlines()[-1])["full"])
+        with open(full) as f:
             artifacts.append(json.load(f))
         print(
             f"run {i + 1}/{N}: {artifacts[-1]['value']} s "
@@ -43,7 +46,7 @@ def main() -> int:
     totals = [a["value"] for a in artifacts]
     med = sorted(artifacts, key=lambda a: a["value"])[N // 2]
     med["runs"] = totals
-    with open(FULL, "w") as f:
+    with open(full, "w") as f:
         json.dump(med, f, indent=1)
     print(
         json.dumps(

@@ -86,3 +86,38 @@ def test_bench_and_scripts_import_without_running():
     assert bench.RUNS == 3
     for path in SCRIPTS:
         assert callable(_load(path).main), path.name
+
+
+def test_bench_full_never_overwrites_another_cpu_count(tmp_path):
+    import json
+
+    import bench
+
+    assert bench.full_name(str(tmp_path), 4) == "BENCH_FULL.json"  # none yet
+    full = tmp_path / "BENCH_FULL.json"
+    full.write_text(json.dumps({"cpus": 4}))
+    assert bench.full_name(str(tmp_path), 4) == "BENCH_FULL.json"
+    assert bench.full_name(str(tmp_path), 32) == "BENCH_FULL_c32.json"
+    full.write_text(json.dumps({"value": 86.467}))  # unstamped: another count
+    assert bench.full_name(str(tmp_path), 4) == "BENCH_FULL_c4.json"
+    full.write_text("not json")
+    assert bench.full_name(str(tmp_path), 4) == "BENCH_FULL_c4.json"
+
+
+def test_bench_summary_line_names_the_file_and_stays_short():
+    import json
+
+    import bench
+
+    calib = {"py_sec": 12.3456, "jvm_sec": 12.3456, "acc": 1157224768}
+    result = {
+        "value": 12345.6789,
+        "sf": 0.1,
+        "cpus": 128,
+        "timing": "median_of_3",
+        "queries": dict.fromkeys(bench.HEADLINE, 1.0),
+        "calib": {"start": calib, "end": calib},
+    }
+    line = bench.summary_line(result, "BENCH_FULL_c128.json")
+    assert len(line) < 200, len(line)
+    assert json.loads(line)["full"] == "BENCH_FULL_c128.json"

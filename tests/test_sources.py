@@ -1,5 +1,5 @@
 """Source/sink layer tests: plan-level partition pruning, JDBC reader
-option validation, and write-mode safety."""
+option validation, write-mode safety, and the parquet schema cache."""
 
 from __future__ import annotations
 
@@ -413,3 +413,170 @@ def test_compact_handles_hive_escaped_partition_values(spark):
         ) == ["a:b", "c d"]
     finally:
         spark.sql("DROP TABLE IF EXISTS esc_compact")
+
+
+# -- parquet schema cache ----------------------------------------------------
+
+
+def _next_job_id(spark) -> int:
+    n = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+    return n if isinstance(n, int) else n.get()
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def test_repeat_read_table_starts_no_spark_job(spark):
+    """The first read of a table infers its schema (one Spark job); a
+    repeat read of the same unchanged files reuses the cached schema
+    and starts none."""
+    first = readers.read_table(spark, SF, "nation")
+    j0 = _next_job_id(spark)
+    again = readers.read_table(spark, SF, "nation")
+    assert again.schema == first.schema
+    assert _next_job_id(spark) == j0
+
+
+def test_rewritten_dir_returns_new_schema_and_rows(spark, tmp_path):
+    p = str(tmp_path / "rewrite")
+    spark.range(3).selectExpr("id", "id * 2 AS v").write.parquet(p)
+    assert readers.read_parquet(spark, p).dtypes == [("id", "bigint"), ("v", "bigint")]
+
+    spark.range(3).selectExpr("id", "id * 2 AS v", "'x' AS w").write.mode(
+        "overwrite"
+    ).parquet(p)
+    back = readers.read_parquet(spark, p)
+    assert back.columns == ["id", "v", "w"]
+    assert _rows(back) == [(0, 0, "x"), (1, 2, "x"), (2, 4, "x")]
+
+    spark.range(3).selectExpr("id", "id * 0.5 AS v").write.mode("overwrite").parquet(p)
+    back = readers.read_parquet(spark, p)
+    assert dict(back.dtypes)["v"].startswith("decimal")
+    assert _rows(back) == [(0, 0), (1, 0.5), (2, 1)]
+
+
+def test_file_rewritten_in_place_returns_new_schema(spark, tmp_path):
+    """Same file name, new contents: only size, mtime and inode tell
+    the two file sets apart."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "in_place")
+    os.makedirs(p)
+    f = os.path.join(p, "f.parquet")
+    pq.write_table(pa.table({"a": [1]}), f)
+    assert readers.read_parquet(spark, p).columns == ["a"]
+    pq.write_table(pa.table({"a": [1], "b": ["x"]}), f)
+    back = readers.read_parquet(spark, p)
+    assert back.columns == ["a", "b"]
+    assert _rows(back) == [(1, "x")]
+
+
+def test_rewritten_nanos_column_is_rebuilt(spark, tmp_path):
+    """A path first read with a plain int64 ``ts`` and then rewritten
+    with ``ts`` as TIMESTAMP(NANOS) must come back as a timestamp, not
+    as the first read's bigint."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "nanos_rewrite")
+    os.makedirs(p)
+    ns = 1_700_000_000_123_456_789
+    pq.write_table(pa.table({"ts": pa.array([ns], pa.int64())}), os.path.join(p, "a.parquet"))
+    assert dict(readers.read_parquet(spark, p).dtypes)["ts"] == "bigint"
+
+    os.remove(os.path.join(p, "a.parquet"))
+    pq.write_table(
+        pa.table({"ts": pa.array([ns], pa.timestamp("ns"))}), os.path.join(p, "b.parquet")
+    )
+    back = readers.read_parquet(spark, p)
+    assert dict(back.dtypes)["ts"] == "timestamp_ntz"
+    assert str(back.collect()[0]["ts"]) == "2023-11-14 22:13:20.123456"
+
+
+def test_partitioned_dir_cached_read_equals_inferred_read(spark, tmp_path):
+    p = str(tmp_path / "hive_part")
+    spark.range(12).selectExpr("id", "id % 3 AS p", "cast(id AS string) AS s").write.partitionBy(
+        "p"
+    ).parquet(p)
+    fresh = spark.read.parquet(p)
+    readers.read_parquet(spark, p)
+    j0 = _next_job_id(spark)
+    cached = readers.read_parquet(spark, p)
+    assert _next_job_id(spark) == j0
+    assert cached.schema == fresh.schema
+    assert cached.columns == fresh.columns == ["id", "s", "p"]
+    assert _rows(cached) == _rows(fresh)
+    assert _rows(cached.filter("p = 1")) == _rows(fresh.filter("p = 1"))
+
+
+def test_schema_confs_key_the_cache_per_session(spark, tmp_path):
+    """A session with a different ``binaryAsString`` must infer its own
+    schema, not reuse the entry another session stored."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    # written without Spark's own schema in the footer, which would
+    # otherwise override binaryAsString
+    p = str(tmp_path / "binary")
+    os.makedirs(p)
+    pq.write_table(pa.table({"b": pa.array([b"ab"], pa.binary())}), os.path.join(p, "f.parquet"))
+    other = spark.newSession()
+    other.conf.set("spark.sql.parquet.binaryAsString", "true")
+    assert dict(readers.read_parquet(spark, p).dtypes)["b"] == "binary"
+    as_string = readers.read_parquet(other, p)
+    assert dict(as_string.dtypes)["b"] == "string"
+    assert as_string.collect()[0]["b"] == "ab"
+    assert dict(readers.read_parquet(spark, p).dtypes)["b"] == "binary"
+
+
+def test_schema_cache_keeps_one_entry_per_path_within_its_bound(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(readers, "SCHEMA_CACHE_MAX", 2)
+    paths = [str(tmp_path / n) for n in "abc"]
+    for p in paths:
+        spark.range(2).write.parquet(p)
+        readers.read_parquet(spark, p)
+    assert list(readers._schemas)[-2:] == paths[1:]
+    assert paths[0] not in readers._schemas
+    spark.range(2).selectExpr("id", "1 AS x").write.mode("overwrite").parquet(paths[2])
+    assert readers.read_parquet(spark, paths[2]).columns == ["id", "x"]
+    assert len(readers._schemas) == 2
+    assert readers._schemas[paths[2]].raw.fieldNames() == ["id", "x"]
+
+
+def test_concurrent_readers_all_get_the_right_schema(spark, tmp_path):
+    """More threads than cores race on the same paths, hits and misses
+    mixed; a double inference is harmless and every read is right."""
+    import sys
+    import threading
+
+    paths = {}
+    for k in range(3):
+        p = str(tmp_path / f"p{k}")
+        spark.range(2).selectExpr("id", *(f"id AS c{i}" for i in range(k))).write.parquet(p)
+        paths[p] = ["id"] + [f"c{i}" for i in range(k)]
+    errors = []
+
+    def work():
+        try:
+            for _ in range(3):
+                for p, cols in paths.items():
+                    assert readers.read_parquet(spark, p).columns == cols
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=work) for _ in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    for p, cols in paths.items():
+        assert readers._schemas[p].raw.fieldNames() == cols
